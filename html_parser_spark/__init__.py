@@ -19,8 +19,8 @@ stack:
 * ``sources``    — input-table builders (synthetic transcripts per
                    BASELINE.json ``input_hint``) and readers.
 * ``plans``      — the end-to-end extraction pipeline: partitioning +
-                   skew salting, ordering assertion, per-partition
-                   checkpoint/lineage control table, idempotent resume.
+                   skew salting, ordering assertion, per-bucket
+                   commit/lineage control table, idempotent resume.
 * ``streaming``  — Structured Streaming variant of the extraction
                    stage with watermarked windowed metrics.
 """

@@ -69,13 +69,6 @@ def node_count_udf():
     return udf
 
 
-def element_count_udf():
-    @F.pandas_udf(LongType())
-    def udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        yield from _series_map(it, lambda h: parse(h.encode("utf-8")).n_elements())
-    return udf
-
-
 def query_count_udf(selector):
     """count(queryAll(selector)) per document."""
     sel = _compiled(selector)

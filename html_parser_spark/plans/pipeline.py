@@ -1,6 +1,5 @@
 """End-to-end extraction pipeline: partitioning, skew salting, ordering
-assertion, per-partition checkpoint/lineage control table, idempotent
-resume.
+assertion, per-bucket commit/lineage control table, idempotent resume.
 
 Design for the 10^12-turn target (north_rule):
 
@@ -12,9 +11,10 @@ Design for the 10^12-turn target (north_rule):
   resumed runs overwrite, never duplicate).
 * **Shuffle AFTER the kernel, not before.**  Extraction is row-parallel
   (map-only), so the kernel runs directly on the scan partitions with
-  ZERO data movement; the only shuffle is the repartition of the
-  *extracted* output on ``bucket`` for the partitioned write — and the
-  extracted text is several times smaller than the raw HTML input.  At
+  ZERO data movement; the only shuffle is the rebalance of the
+  *extracted* output on ``bucket`` for the partitioned write (AQE sizes
+  its partitions) — and the extracted text is several times smaller
+  than the raw HTML input.  At
   10^12 turns this is the difference between shuffling ~100 TB of raw
   pages and shuffling the ~20 TB of main text.  (Measured on this box:
   pre-kernel shuffle capped 4→16-core scaling efficiency at 0.62;
@@ -27,15 +27,19 @@ Design for the 10^12-turn target (north_rule):
   stalling one.  For ordinary appends-of-many-files layouts the scan
   partitioning already balances, and AQE skew handling is the backstop.
 * **Ordering assertion.**  Correctness is defined under stable turn
-  ordering; ``assert_turn_ordering`` verifies per-conversation
-  turn_idx density (count == distinct == max-min+1) with one
-  aggregation — the windowed ``row_number`` variant is available via
-  ``strict=True`` and is the only window use in the pipeline, exactly
-  as the north star limits it.
+  ordering: per-conversation turn_idx density (count == distinct ==
+  max-min+1, min == 0, ``conversation_density``) is checked over the
+  buckets a run wrote, in the same query that appends their control
+  rows, so a violation fails the run before any commit.
+  ``assert_turn_ordering`` runs the same check on any frame; its
+  windowed ``row_number`` variant (``strict=True``) is the only window
+  use in the pipeline, exactly as the north star limits it.
 * **Control table.**  One lineage/metric row per completed bucket
   ``(run_id, bucket, n_rows, n_convs, n_chars_out, started_at,
-  finished_at, wall_sec)``; resume = anti-join of buckets against
-  completed control rows for the run_id.
+  finished_at, wall_sec)``; the counts are the bucket's, the three
+  time columns are the run's (start, end of its write, and their
+  difference), the same on every row of the run.  Resume = anti-join of
+  buckets against completed control rows for the run_id.
 """
 
 from __future__ import annotations
@@ -44,7 +48,8 @@ import time
 from dataclasses import dataclass
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.errors import SparkRuntimeException
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.html_ops import extract_struct_udf
@@ -119,12 +124,27 @@ def extract_turns(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> Data
     )
 
 
+def conversation_density(df: DataFrame, *keys: str, aggs=()) -> DataFrame:
+    """One row per conversation (grouped by ``keys`` + ``conv_id``): its
+    turn count ``n``, ``bad`` when its turn_idx are not exactly
+    0..n-1 (count == countDistinct == max-min+1, min == 0), and
+    ``aggs``.  The one definition of dense turn ordering, shared by
+    :func:`assert_turn_ordering` and the commit of :func:`run_extraction`."""
+    n = F.count("*")
+    return df.groupBy(*keys, "conv_id").agg(
+        n.alias("n"),
+        ((n != F.countDistinct("turn_idx")) | (F.min("turn_idx") != 0)
+         | (F.max("turn_idx") != n - 1)).alias("bad"),
+        *aggs,
+    )
+
+
 def assert_turn_ordering(df: DataFrame, strict: bool = False) -> int:
     """Return number of conversations violating dense turn ordering.
 
-    Cheap path: one groupBy checking count == countDistinct ==
-    max-min+1 and min == 0.  Strict path: window row_number must equal
-    the rank of turn_idx (the pipeline's single sanctioned window use).
+    Cheap path: one :func:`conversation_density` aggregation.  Strict
+    path: window row_number must equal the rank of turn_idx (the
+    pipeline's single sanctioned window use).
     """
     if strict:
         w = Window.partitionBy("conv_id").orderBy(F.col("turn_idx").asc())
@@ -134,15 +154,7 @@ def assert_turn_ordering(df: DataFrame, strict: bool = False) -> int:
             .select("conv_id").distinct().count()
         )
         return bad
-    agg = df.groupBy("conv_id").agg(
-        F.count("*").alias("n"),
-        F.countDistinct("turn_idx").alias("nd"),
-        F.min("turn_idx").alias("lo"),
-        F.max("turn_idx").alias("hi"),
-    )
-    return agg.where(
-        (F.col("n") != F.col("nd")) | (F.col("lo") != 0) | (F.col("hi") != F.col("n") - 1)
-    ).count()
+    return conversation_density(df).where("bad").count()
 
 
 CONTROL_COLUMNS = [
@@ -150,16 +162,74 @@ CONTROL_COLUMNS = [
     "started_at", "finished_at", "wall_sec",
 ]
 
+ORDERING_ERROR = "turn-ordering violated"
+
 
 def completed_buckets(spark: SparkSession, control_dir: str, run_id: str):
-    from ..sources.catalog import read_table
+    """Buckets with a control row for ``run_id``; empty when the control
+    table does not exist yet or holds no data file (a first run that
+    failed before its commit leaves an empty directory).  Any other read
+    error propagates: a control table that cannot be read must not
+    silently turn a resume into a recompute of the whole corpus."""
+    from ..sources.catalog import read_table, table_exists
 
-    try:
-        ctl = read_table(spark, control_dir)
-    except Exception:
+    if not table_exists(spark, control_dir):
         return set()
+    ctl = read_table(spark, control_dir, schema="run_id string, bucket int")
     rows = ctl.where(F.col("run_id") == run_id).select("bucket").distinct().collect()
     return {r[0] for r in rows}
+
+
+def bucketed_output(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
+    """What :func:`run_extraction` writes: :func:`extract_turns`, then one
+    shuffle of the (much smaller) extracted columns on ``bucket``, so each
+    bucket's files come from few tasks (no small-files blowup).
+    ``REBALANCE`` starts from ``n_buckets`` partitions and lets AQE
+    coalesce small ones and split oversized ones."""
+    return extract_turns(df, cfg).hint("rebalance", cfg.n_buckets, "bucket")
+
+
+def _commit(written: DataFrame, control_dir: str, run_id: str,
+            started: float, finished: float, check_ordering: bool) -> int:
+    """One query over the buckets a run wrote: per bucket ``n_rows``,
+    ``n_convs`` and ``n_chars_out``, appended as control rows; returns
+    the rows in ``written``.  With ``check_ordering`` a conversation that
+    is not dense fails the query (``raise_error``) before the append
+    commits, and this raises ``ValueError``."""
+    from ..sources.catalog import _is_table_ident, iceberg_available
+
+    chars = F.sum(F.octet_length("main_text")).alias("n_chars")
+    rows = conversation_density(written, "bucket", aggs=[chars]).groupBy("bucket").agg(
+        F.sum("n").alias("n_rows"),
+        F.count("conv_id").alias("n_convs"),
+        F.sum("n_chars").alias("n_chars_out"),
+        F.count(F.when(F.col("bad"), 1)).alias("n_bad"),
+    )
+    if check_ordering:
+        msg = F.format_string(ORDERING_ERROR + " in %d conversations of bucket %d",
+                              "n_bad", "bucket")
+        rows = rows.where(F.when(F.col("n_bad") > 0, F.raise_error(msg)).otherwise(True))
+    totals = Observation()
+    rows = (
+        rows.observe(totals, F.sum("n_rows").alias("n_rows"))
+        .withColumn("run_id", F.lit(run_id))
+        .withColumn("started_at", F.lit(started))
+        .withColumn("finished_at", F.lit(finished))
+        .withColumn("wall_sec", F.lit(round(finished - started, 3)))
+        .select(*CONTROL_COLUMNS)
+    )
+    try:
+        # Control rows append (Iceberg append when dst is a table ident).
+        if _is_table_ident(control_dir) and iceberg_available(written.sparkSession):
+            rows.writeTo(control_dir).append()
+        else:
+            rows.write.mode("append").parquet(control_dir)
+    except SparkRuntimeException as e:
+        if ORDERING_ERROR not in str(e):
+            raise
+        n_bad = assert_turn_ordering(written)
+        raise ValueError(f"{ORDERING_ERROR} in {n_bad} conversations") from None
+    return totals.get["n_rows"] or 0
 
 
 def run_extraction(
@@ -179,62 +249,41 @@ def run_extraction(
     commit record — a bucket counts as done only once its control row
     exists, and the control row is appended only after the bucket's
     data write completed.
+
+    After the control-table lookup a run submits two queries: the write
+    of :func:`bucketed_output`, then :func:`_commit`.  Ordering is thus
+    checked before any commit, not before any write: a violating run
+    leaves its written buckets uncommitted, as a mid-bucket crash does.
+    ``rows_total`` (the output table's row count) adds, on a resume, a
+    count of the skipped buckets.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    started = time.time()
-
-    df = with_bucket(transcripts, cfg.n_buckets)
-    skipped = set()
-    if resume:
-        skipped = completed_buckets(spark, control_dir, run_id)
-        if skipped:
-            df = df.where(~F.col("bucket").isin(sorted(skipped)))
-
-    if check_ordering:
-        violations = assert_turn_ordering(df)
-        if violations:
-            raise ValueError(f"turn-ordering violated in {violations} conversations")
-
     from ..sources.catalog import read_table, write_table
 
-    extracted = extract_turns(df, cfg)
-    # One shuffle, of the (much smaller) extracted columns only: groups
-    # each bucket into one task's output files instead of every task
-    # writing a sliver of every bucket partition (small-files blowup).
-    # write_table: Iceberg overwritePartitions when dst is a table
-    # identifier and the runtime is present, parquet dynamic partition
-    # overwrite otherwise (same idempotency either way).
-    write_table(
-        extracted.repartition(cfg.n_buckets, F.col("bucket")), out_dir)
+    started = time.time()
 
+    skipped = completed_buckets(spark, control_dir, run_id) if resume else set()
+    done = F.col("bucket").isin(sorted(skipped))
+    todo = with_bucket(transcripts, cfg.n_buckets)
+    extracted = bucketed_output(todo.where(~done) if skipped else todo, cfg)
+    pending = len(skipped) < cfg.n_buckets
+    if pending:
+        # write_table: Iceberg overwritePartitions when dst is a table
+        # identifier and the runtime is present, parquet dynamic
+        # partition overwrite otherwise (same idempotency either way).
+        write_table(extracted, out_dir)
     finished = time.time()
-    # Lineage/metrics per bucket, computed from the committed output.
-    done = (
-        read_table(spark, out_dir)
-        .where(~F.col("bucket").isin(sorted(skipped)) if skipped else F.lit(True))
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.countDistinct("conv_id").alias("n_convs"),
-            F.sum(F.octet_length("main_text")).alias("n_chars_out"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("started_at", F.lit(started))
-        .withColumn("finished_at", F.lit(finished))
-        .withColumn("wall_sec", F.lit(round(finished - started, 3)))
-        .select(*CONTROL_COLUMNS)
-    )
-    # Control rows append (Iceberg append when dst is a table ident).
-    from ..sources.catalog import _is_table_ident, iceberg_available
-    if _is_table_ident(control_dir) and iceberg_available(spark):
-        done.writeTo(control_dir).append()
-    else:
-        done.write.mode("append").parquet(control_dir)
 
-    n_rows = read_table(spark, out_dir).count()
+    # the known schema spares a schema-inference job per read
+    out = read_table(spark, out_dir, schema=extracted.schema)
+    rows_total = 0
+    if pending:
+        written = out.where(~done) if skipped else out
+        rows_total = _commit(written, control_dir, run_id, started, finished, check_ordering)
+    if skipped:
+        rows_total += out.where(done).count()
     return {
         "run_id": run_id,
-        "rows_total": n_rows,
+        "rows_total": rows_total,
         "buckets_skipped": len(skipped),
         "wall_sec": round(finished - started, 3),
     }

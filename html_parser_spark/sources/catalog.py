@@ -18,7 +18,10 @@ maps 1:1:
 
 from __future__ import annotations
 
+from typing import Optional, Union
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -71,12 +74,27 @@ def _write_iceberg(df: DataFrame, dst: str, mode: str) -> None:
         w.append()
 
 
-def read_table(spark: SparkSession, src: str) -> DataFrame:
+def read_table(spark: SparkSession, src: str,
+               schema: Optional[Union[StructType, str]] = None) -> DataFrame:
     """Read transcripts from an Iceberg table identifier or a parquet
-    path; Catalyst gets partition pruning + column pruning either way."""
+    path; Catalyst gets partition pruning + column pruning either way.
+    ``schema`` (a StructType or DDL) reads a parquet path without the
+    schema-inference job, and a directory holding no data file reads as
+    empty instead of failing."""
     if _is_table_ident(src) and iceberg_available(spark):
         return _read_iceberg(spark, src)
-    return spark.read.parquet(src)
+    reader = spark.read.schema(schema) if schema else spark.read
+    return reader.parquet(src)
+
+
+def table_exists(spark: SparkSession, src: str) -> bool:
+    """True when ``src`` names an existing Iceberg table or path.  An
+    existence probe rather than a failed read: after a session has used
+    an ``Observation``, every failed read logs a listener error."""
+    if _is_table_ident(src) and iceberg_available(spark):
+        return spark.catalog.tableExists(src)
+    path = spark._jvm.org.apache.hadoop.fs.Path(src)  # noqa: SLF001
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path)  # noqa: SLF001
 
 
 def write_table(

@@ -15,9 +15,10 @@ Deployment shape required by the north rule::
 The job is idempotent per (run-id, bucket): re-submitting after a
 partial failure skips completed buckets (anti-join against the control
 table) and overwrites only the buckets it recomputes.  Metrics for
-each completed bucket (rows, conversations, output bytes, wall) are
-appended to the control table — the distributed analog of the
-reference's instrumentation hooks (src/debug/instrumentation.zig).
+each completed bucket (its rows, conversations and output bytes, with
+the run's start, end and wall) are appended to the control table — the
+distributed analog of the reference's instrumentation hooks
+(src/debug/instrumentation.zig).
 """
 
 from __future__ import annotations

@@ -141,6 +141,22 @@ def test_depth_cap_no_recursion_error():
         assert "x" in out
 
 
+def test_deep_table_sections_no_recursion_error(spark):
+    """3000 nested ``<tbody>`` wrappers: the section walk of
+    ``table_rows`` is iterative, so the table survives in the kernel
+    extractor, the renderer and the ``html_markdown`` SQL function."""
+    from html_parser_spark.operators.html_ops import register_sql_functions
+
+    html = "<table>" + "<tbody>" * 3000 + "<tr><td>x</td></tr>" \
+        + "</tbody>" * 3000 + "</table>"
+    assert _rows(html) == [["x"]]
+    assert md(html) == "| x |\n| --- |"
+    register_sql_functions(spark)
+    got = spark.createDataFrame([(html,)], "html string") \
+        .selectExpr("html_markdown(html) as m").collect()[0]["m"]
+    assert got == "| x |\n| --- |"
+
+
 def test_depth_cap_boundary_structure_preserved():
     # nesting below the cap keeps full structure
     from html_parser_spark.kernel.markdown import MAX_RENDER_DEPTH

@@ -2,13 +2,14 @@
 ordering, bucket checkpointing, idempotent resume."""
 
 import os
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
 
 from html_parser_spark.plans.pipeline import (
-    PipelineConfig, assert_turn_ordering, completed_buckets, run_extraction,
-    with_bucket,
+    CONTROL_COLUMNS, PipelineConfig, assert_turn_ordering, completed_buckets,
+    run_extraction, with_bucket,
 )
 from html_parser_spark.sources.transcripts import transcripts_from_documents
 
@@ -48,7 +49,7 @@ def test_run_and_resume(spark, transcripts, tmp_path):
 
     m1 = run_extraction(spark, transcripts.drop("doc_id", "expected_main_text"),
                         out_dir, ctl_dir, run_id="r1", cfg=cfg)
-    assert m1["rows_total"] == transcripts.count()
+    assert m1["rows_total"] == transcripts.count() == spark.read.parquet(out_dir).count()
     assert m1["buckets_skipped"] == 0
     assert completed_buckets(spark, ctl_dir, "r1") == {0, 1, 2, 3}
 
@@ -56,15 +57,20 @@ def test_run_and_resume(spark, transcripts, tmp_path):
     m2 = run_extraction(spark, transcripts.drop("doc_id", "expected_main_text"),
                         out_dir, ctl_dir, run_id="r1", cfg=cfg)
     assert m2["buckets_skipped"] == 4
-    assert m2["rows_total"] == m1["rows_total"]
+    assert m2["rows_total"] == m1["rows_total"] == spark.read.parquet(out_dir).count()
 
     # output joins back losslessly
     out = spark.read.parquet(out_dir)
     assert out.select("conv_id", "turn_idx").distinct().count() == m1["rows_total"]
     # control table carries lineage metrics
     ctl = spark.read.parquet(ctl_dir)
-    assert set(ctl.columns) >= {"run_id", "bucket", "n_rows", "n_convs", "wall_sec"}
+    assert ctl.columns == CONTROL_COLUMNS
     assert ctl.where(F.col("run_id") == "r1").agg(F.sum("n_rows")).collect()[0][0] >= m1["rows_total"]
+    # each control row carries its bucket's counts in the output table
+    expected = out.groupBy("bucket").agg(
+        F.count("*"), F.countDistinct("conv_id"), F.sum(F.octet_length("main_text")))
+    got = ctl.select("bucket", "n_rows", "n_convs", "n_chars_out")
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expected.collect()))
 
 
 def test_partial_resume_processes_only_missing_buckets(spark, transcripts, tmp_path):
@@ -75,14 +81,15 @@ def test_partial_resume_processes_only_missing_buckets(spark, transcripts, tmp_p
 
     # Simulate a crashed run: process buckets {0,1} only, with control rows.
     part = with_bucket(src, 4).where(F.col("bucket") < 2)
-    run_extraction(spark, part.drop("bucket"), out_dir, ctl_dir, run_id="r2", cfg=cfg)
+    m0 = run_extraction(spark, part.drop("bucket"), out_dir, ctl_dir, run_id="r2", cfg=cfg)
+    assert m0["rows_total"] == spark.read.parquet(out_dir).count() == part.count()
     pre = completed_buckets(spark, ctl_dir, "r2")
     assert pre == {0, 1}
 
     m = run_extraction(spark, src, out_dir, ctl_dir, run_id="r2", cfg=cfg)
     assert m["buckets_skipped"] == 2
     assert completed_buckets(spark, ctl_dir, "r2") == {0, 1, 2, 3}
-    assert spark.read.parquet(out_dir).count() == src.count()
+    assert m["rows_total"] == spark.read.parquet(out_dir).count() == src.count()
 
 
 def test_mid_bucket_crash_overwrites_partial_output(spark, transcripts, tmp_path):
@@ -116,9 +123,117 @@ def test_mid_bucket_crash_overwrites_partial_output(spark, transcripts, tmp_path
     m = run_extraction(spark, src, out_dir, ctl_dir, run_id="r3", cfg=cfg)
     assert m["buckets_skipped"] == 1  # only the committed bucket 0
     out = spark.read.parquet(out_dir)
-    assert out.count() == src.count()  # partial partition replaced, not appended
+    assert out.count() == src.count() == m["rows_total"]  # partial partition replaced, not appended
     assert out.select("conv_id", "turn_idx").distinct().count() == src.count()
     assert completed_buckets(spark, ctl_dir, "r3") == {0, 1, 2, 3}
+
+
+def _drain_listeners(spark):
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def _sql_executions(spark, group):
+    """Ids of the SQL executions that ran a job of job group ``group``."""
+    _drain_listeners(spark)
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    jobs = set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+    store = spark._jsparkSession.sharedState().statusStore()
+    return [e.executionId() for e in conv.asJava(store.executionsList())
+            if jobs & {int(j) for j in conv.asJava(e.jobs().keySet())}]
+
+
+def _grouped_run(spark, group, *args, **kwargs):
+    spark.sparkContext.setJobGroup(group, "run_extraction")
+    try:
+        m = run_extraction(spark, *args, **kwargs)
+    finally:
+        spark.sparkContext.setJobGroup("", "")
+    return m, _sql_executions(spark, group)
+
+
+def test_run_submits_lookup_plus_two_queries(spark, transcripts, tmp_path):
+    """A fresh run is the control lookup plus two queries: the write,
+    then the commit (ordering check, control rows, row total).  An input
+    rescan or a re-read of the output adds a query and fails here."""
+    src = transcripts.drop("doc_id", "expected_main_text")
+    out, ctl = str(tmp_path / "out"), str(tmp_path / "ctl")
+    cfg = PipelineConfig(n_buckets=4)
+
+    m, q = _grouped_run(spark, "fresh-no-control", src, out, ctl, "q1", cfg=cfg)
+    assert len(q) == 2            # no control table yet: the lookup reads nothing
+    m, q = _grouped_run(spark, "fresh", src, out, ctl, "q2", cfg=cfg)
+    assert len(q) == 3            # lookup + write + commit
+    m, q = _grouped_run(spark, "full-resume", src, out, ctl, "q2", cfg=cfg)
+    assert len(q) == 2            # lookup + count of the skipped buckets
+    assert m["buckets_skipped"] == 4 and m["rows_total"] == src.count()
+
+
+def test_ordering_violation_raises_before_any_commit(spark, transcripts, tmp_path):
+    """Ordering is checked before any commit: a planted duplicate turn
+    raises with the written buckets left uncommitted (no control row),
+    and the next clean run overwrites them and commits every bucket."""
+    src = transcripts.drop("doc_id", "expected_main_text")
+    out, ctl = str(tmp_path / "out"), str(tmp_path / "ctl")
+    cfg = PipelineConfig(n_buckets=4)
+
+    with pytest.raises(ValueError, match="turn-ordering violated in 1 conversations"):
+        run_extraction(spark, src.union(src.limit(1)), out, ctl, "v", cfg=cfg)
+    assert completed_buckets(spark, ctl, "v") == set()
+
+    m = run_extraction(spark, src, out, ctl, "v", cfg=cfg)
+    assert m["buckets_skipped"] == 0
+    assert completed_buckets(spark, ctl, "v") == {0, 1, 2, 3}
+    assert m["rows_total"] == spark.read.parquet(out).count() == src.count()
+
+
+def test_unreadable_control_table_raises(spark, tmp_path):
+    """Only a missing (or still empty) control table means "nothing
+    completed"; one that cannot be read fails the resume instead of
+    silently recomputing the whole corpus."""
+    ctl = tmp_path / "ctl"
+    assert completed_buckets(spark, str(ctl), "r") == set()
+    ctl.mkdir()
+    assert completed_buckets(spark, str(ctl), "r") == set()
+    (ctl / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        completed_buckets(spark, str(ctl), "r")
+
+
+@contextmanager
+def _jvm_errors(spark):
+    """Lines the JVM logs at ERROR while the block runs."""
+    jvm = spark._jvm
+    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    writer = jvm.java.io.StringWriter()
+    appender = jvm.org.apache.logging.log4j.core.appender.WriterAppender.createAppender(
+        None, None, writer, "test-errors", False, True)
+    appender.start()
+    root = ctx.getConfiguration().getRootLogger()
+    root.addAppender(appender, jvm.org.apache.logging.log4j.Level.ERROR, None)
+    ctx.updateLoggers()
+    lines = []
+    try:
+        yield lines
+    finally:
+        _drain_listeners(spark)
+        root.removeAppender("test-errors")
+        ctx.updateLoggers()
+        appender.stop()
+        lines.extend(str(writer.toString()).splitlines())
+
+
+def test_normal_runs_log_no_errors(spark, transcripts, tmp_path):
+    """The commit observes its row total (an Observation, whose session
+    listener logs an error for every failed read after it); normal runs,
+    fresh ones included, must not fail a read and log nothing at ERROR."""
+    src = transcripts.drop("doc_id", "expected_main_text")
+    cfg = PipelineConfig(n_buckets=4)
+    with _jvm_errors(spark) as errors:
+        for i in range(2):
+            run_extraction(spark, src, str(tmp_path / f"out{i}"),
+                           str(tmp_path / f"ctl{i}"), "n", cfg=cfg)
+        run_extraction(spark, src, str(tmp_path / "out1"), str(tmp_path / "ctl1"), "n", cfg=cfg)
+    assert errors == []
 
 
 def test_skewed_conversations_are_salted(spark, sf_dir):

@@ -68,3 +68,23 @@ def test_column_pruning(spark, sf_dir):
 
     p = plan_of(m.queries()["tpch_pricing_summary"](spark, sf_dir))
     assert "l_comment" not in p
+
+
+def test_write_plan_has_one_bucket_exchange_after_kernel(spark, sf_dir):
+    """What run_extraction writes: the kernel still reads the scan
+    directly, and the one Exchange is the bucket rebalance above it (AQE
+    sizes its partitions; a fixed-count repartition would not shrink)."""
+    from html_parser_spark.plans.pipeline import PipelineConfig, bucketed_output
+    from html_parser_spark.sources.transcripts import transcripts_from_documents
+
+    t = transcripts_from_documents(spark, sf_dir, n_convs=20)
+    p = plan_of(bucketed_output(t.drop("doc_id", "expected_main_text"), PipelineConfig()))
+    section = p.split("== Physical Plan ==")[1]
+    tree = section.split("\n\n")[0].splitlines()
+    exchanges = [i for i, ln in enumerate(tree) if "Exchange" in ln]
+    kernel = next(i for i, ln in enumerate(tree) if "ArrowEvalPython" in ln)
+    assert len(exchanges) == 1 and exchanges[0] < kernel
+    node = tree[exchanges[0]].split("Exchange")[1].strip()       # "(5)"
+    details = section.split(f"\n{node} Exchange")[1].split("\n\n")[0]
+    assert "hashpartitioning(bucket#" in details
+    assert "REBALANCE_PARTITIONS_BY_COL" in details
